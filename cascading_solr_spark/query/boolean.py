@@ -55,6 +55,7 @@ from cascading_solr_spark.query.search import (
     _RESULT_SCHEMA,
     _fetch_stored,
     _scan_terms,
+    _shard_topk,
     term_dfs,
 )
 from cascading_solr_spark.query.wand import (
@@ -411,18 +412,18 @@ def search_boolean(
     kernel = boolean_kernel(
         node, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size
     )
+    scan = _scan_terms(index, all_terms)
     matched = (
         index.postings(spark)
         .select(
             "shard", "term", "salt", "n_docs", "n_blocks",
             "doc_ids", "boffs_ids", "block_last_id", "tfs", "dls",
         )
-        .filter(F.col("term").isin(_scan_terms(index, all_terms)))
+        .filter(F.col("term").isin(scan))
     )
-    local = matched.groupBy("shard").applyInPandas(kernel, _RESULT_SCHEMA)
-    top = local.orderBy(F.desc("score"), F.asc("doc_id"))
-    if k is not None:
-        top = top.limit(k)
+    top = _shard_topk(
+        spark, index, matched, lambda _: kernel, _RESULT_SCHEMA, scan, k
+    )
     if not with_stored:
         return top
     return _fetch_stored(spark, index, top, bounded=k is not None)

@@ -28,6 +28,16 @@ each shard partition scores its local postings in one Arrow-vectorized kernel
 (term-at-a-time exact, or block-max MaxScore with decode-skipping pruning —
 query/wand.py), emits a local top-k, and a global order-merge takes the final
 k.  Ties broken (score desc, doc_id asc) for deterministic rank-identity.
+One executor, :func:`_shard_topk`, runs this fan-out for the top-k entry
+points (search, search_phrase, search_many, search_dismax, search_after,
+boolean.search_boolean), behind a size gate: when the handle's driver-side dictionary
+bounds the scanned postings (Σ df of the scan terms, plus the tombstone
+count) below :data:`LOCAL_SHARD_MAX_POSTINGS`, the pruned scan is
+collected as Arrow in one Spark job and the same kernel runs in the driver,
+shard by shard — no exchange, no Python-worker hop.  Such a read returns a
+small frame already computed at call time, not a lazy plan.  Larger,
+unbounded (k=None) or dictionary-less reads keep the distributed
+``groupBy("shard").applyInPandas`` plan.
 
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
 works because postings files are sorted by term; all shards scan in parallel;
@@ -37,9 +47,11 @@ only ``shards × salts × terms`` tiny top-k rows reach the global merge.
 from __future__ import annotations
 
 import re
+import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -78,6 +90,9 @@ from cascading_solr_spark.query.wand import (
 # parquet scans must not read the (corpus-token-sized) pos binaries —
 # only the phrase kernel selects them.
 _SCORE_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
+
+# search_many's result rows
+_BATCH_SCHEMA = "query_id string, doc_id long, score double"
 
 
 def _score_rows(index: Index, spark: SparkSession) -> DataFrame:
@@ -129,6 +144,132 @@ def _empty_ids(spark: SparkSession) -> DataFrame:
     df = spark.createDataFrame([], "doc_id long")
     _EMPTY_IDS_CACHE[id(spark)] = (spark, df)
     return df
+
+
+_ARROW_TYPES = {"long": pa.int64(), "double": pa.float64(), "string": pa.string()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """Arrow twin of a flat ``"name type, ..."`` result schema."""
+    return pa.schema(
+        [(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in ddl.split(","))]
+    )
+
+
+def _local_frame(spark: SparkSession, ddl: str, data=None) -> DataFrame:
+    """A small driver-built frame (``data``: columns by name, None = no
+    rows) as a LocalRelation, built from a pyarrow Table whatever the Arrow
+    conf says.  Collecting or offsetting it runs no Spark job, and
+    broadcasting it runs a JVM-only one.  A frame made from a Python list
+    is a Python RDD scan instead: every use of it is a job whose tasks
+    start Python workers to unpickle the rows (~0.4 s cold)."""
+    schema = _arrow_schema(ddl)
+    if data is None:
+        return spark.createDataFrame(schema.empty_table())
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pd.DataFrame(data), schema=schema,
+                             preserve_index=False)
+    )
+
+
+#: Size gate of the ranked shard fan-out (:func:`_shard_topk`): a read whose
+#: scanned postings are bounded — Σ dict-cache df of its scan terms, plus
+#: ``n_deleted`` when the tombstone term is scanned — by FEWER than this many
+#: postings runs its shard kernels in the driver.  A distributed ranked read
+#: pays a ~0.25 s floor whatever its size (the shard exchange, the Arrow
+#: round trip to a Python worker and AQE's re-plan; OPTIMIZATION_r06 §14),
+#: while the driver runs every shard's kernel serially.  Measured with
+#: ``bench_shard_gate.py`` (4-vCPU host, local[4], 4 shards, 40k synthetic
+#: files, warm OR reads, k=10, medians of 5): the driver path used less CPU
+#: at every size tried, up to 1.6M postings, and less wall time up to ~1.2M
+#: (160k postings: 165 vs 283 ms wall, 280 vs 510 ms CPU; 1.24M: 415 vs
+#: 462 ms wall); exhaustive TAAT reads (the AND / mm / wildcard kernel)
+#: crossed on wall time near 1.5M.  The budget sits at about a third of the
+#: wall-time crossover because only the distributed kernels scale with
+#: cores: a host with more of them crosses sooner.
+LOCAL_SHARD_MAX_POSTINGS = 500_000
+
+class _KernelTrace(threading.local):
+    """Kernel counters of the calling thread's last ranked shard execution
+    (``maxscore_kernel`` / ``batch_kernel``: blocks decoded and skipped,
+    rows decoded and served from the decode cache): ``counters`` is the
+    dict a driver-path run filled, or None after a distributed run, whose
+    kernels ran in Python workers."""
+
+    counters: dict | None = None
+
+
+#: internal, for the query trace: ``_last_kernel.counters``
+_last_kernel = _KernelTrace()
+
+
+def _shard_topk(
+    spark: SparkSession,
+    index: Index,
+    matched: DataFrame,
+    kernel,
+    schema: str,
+    scan_terms: list[str] | None,
+    fetch_k: int | None,
+    per: str | None = None,
+) -> DataFrame:
+    """The ranked shard fan-out every top-k read shares.
+
+    ``matched`` is the pruned postings scan over ``scan_terms``;
+    ``kernel(counters)`` builds the per-shard scorer (``counters``: a dict
+    for the kernel's block counters, or None).  The kernel runs once per
+    shard group, then the global (score desc, doc_id asc) order keeps the
+    first ``fetch_k`` rows — per ``per`` value (search_many's per-query
+    top-k) when ``per`` is given.
+
+    Size gate: when the handle's dict cache bounds the scanned postings
+    below :data:`LOCAL_SHARD_MAX_POSTINGS` and ``fetch_k`` is bounded, the
+    scan is collected as Arrow (one Spark job, no exchange), the kernel
+    runs in the driver shard by shard in shard order, and the result comes
+    back as a LocalRelation — computed now, not at the caller's action.
+    Otherwise (no dict cache, ``fetch_k=None``, ``scan_terms=None``, over
+    budget) it plans the distributed ``groupBy("shard").applyInPandas``,
+    order and limit.  Both paths run the same kernel on the same rows, and
+    the kernels process rows in a canonical content order, so the results
+    are bit-identical."""
+    bound = None
+    if fetch_k is not None and scan_terms is not None:
+        cache = index.dict_cache(spark)
+        if cache is not None:
+            terms = set(scan_terms)
+            bound = sum(cache.get(t, 0) for t in terms)
+            if DELETED_TERM in terms:
+                bound += index.n_deleted
+    if bound is None or bound >= LOCAL_SHARD_MAX_POSTINGS:
+        _last_kernel.counters = None
+        local = matched.groupBy("shard").applyInPandas(kernel(None), schema)
+        if per is None:
+            top = local.orderBy(F.desc("score"), F.asc("doc_id"))
+            return top if fetch_k is None else top.limit(fetch_k)
+        w = Window.partitionBy(per).orderBy(F.desc("score"), F.asc("doc_id"))
+        return (
+            local.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= fetch_k)
+            .drop("_rn")
+        )
+    counters: dict = {}
+    _last_kernel.counters = counters
+    score = kernel(counters)
+    rows = matched.toArrow().to_pandas()
+    parts = [
+        score(g.reset_index(drop=True))
+        for _, g in rows.groupby("shard", sort=True)
+    ]
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return _local_frame(spark, schema)
+    out = pd.concat(parts, ignore_index=True)
+    keys = ([per] if per else []) + ["score", "doc_id"]
+    out = out.sort_values(
+        keys, ascending=[True] * bool(per) + [False, True], kind="stable"
+    )
+    out = out.groupby(per, sort=False).head(fetch_k) if per else out.head(fetch_k)
+    return _local_frame(spark, schema, out)
 
 
 _QUOTED_RE = re.compile(r'^"([^"]*)"(?:~(\d+))?$')
@@ -862,9 +1003,9 @@ def _fetch_stored(
     ids = [int(r["doc_id"]) for r in rows]
     shards = sorted({i % index.spec.num_shards for i in ids})
     small = F.broadcast(
-        spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in rows],
-            _RESULT_SCHEMA,
+        _local_frame(
+            spark, _RESULT_SCHEMA,
+            {"doc_id": ids, "score": [float(r["score"]) for r in rows]},
         )
     )
     pruned = docs.filter(F.col("shard").isin(shards) & F.col("doc_id").isin(ids))
@@ -1230,7 +1371,13 @@ def search(
       match-count floor, never a docs scan.  MaxScore pruning is unsound
       under a match-count floor (θ from docs that may fail mm over-prunes),
       so mm queries run the exact TAAT kernel.  Ignored under AND (already
-      all-terms)."""
+      all-terms).
+
+    * Evaluation: a bounded read small enough for the driver-local shard
+      kernels (:func:`_shard_topk`'s size gate) is computed AT CALL TIME —
+      its one postings-scan job runs inside this call and the returned
+      frame holds the ranked rows.  Other reads return a lazy plan, as
+      before; the rows are the same either way."""
     q = query.strip()
     pq = parse_quoted(q)
     if pq is not None:
@@ -1333,7 +1480,7 @@ def search(
             if start:
                 top = top.offset(start)
         else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+            top = _local_frame(spark, _RESULT_SCHEMA)
     else:
         idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
         # per-term boosts (term^2.5): multiply the clause weight — exactly
@@ -1348,7 +1495,7 @@ def search(
                 idf[t] *= w
         spec = index.spec
 
-        def _mk_kernel(kk: int | None):
+        def _mk_kernel(kk: int | None, counters: dict | None = None):
             if conjunctive or mm is not None or live_groups:
                 return _taat_kernel(
                     idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size,
@@ -1365,30 +1512,25 @@ def search(
                 )
             return maxscore_kernel(
                 idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size,
-                fterms, excluded_terms=eterms,
+                fterms, counters=counters, excluded_terms=eterms,
             )
 
         expansion_terms = [t for g, _ in live_groups for t in g]
-        matched = postings.filter(
-            F.col("term").isin(
-                _scan_terms(
-                    index,
-                    list(dfs) + list(fterms) + list(eterms)
-                    + expansion_terms,
-                )
-            )
+        scan = _scan_terms(
+            index,
+            list(dfs) + list(fterms) + list(eterms) + expansion_terms,
         )
+        matched = postings.filter(F.col("term").isin(scan))
 
-        def _ranked(kk: int | None) -> DataFrame:
-            local = matched.groupBy("shard").applyInPandas(
-                _mk_kernel(kk), _RESULT_SCHEMA
+        def _ranked(kk: int | None, gated: bool = True) -> DataFrame:
+            # k=None returns ALL matches (ordered, no huge .limit)
+            return _shard_topk(
+                spark, index, matched, lambda c: _mk_kernel(kk, c),
+                _RESULT_SCHEMA, scan if gated else None, kk,
             )
-            return local.orderBy(F.desc("score"), F.asc("doc_id"))
 
         if doc_filter is None:
             top = _ranked(fetch_k)
-            if k is not None:  # k=None returns ALL matches (no huge .limit)
-                top = top.limit(fetch_k)
         elif k is None:
             # exhaustive + doc filter: one distributed semi-join, no collect
             top = _ranked(None).join(
@@ -1414,7 +1556,7 @@ def search(
             top = None
             survivors: list = []
             while True:
-                cand = _ranked(fetch).limit(fetch).collect()
+                cand = _ranked(fetch, gated=False).collect()
                 ok = _doc_filter_probe(
                     spark, index, doc_filter,
                     [int(r["doc_id"]) for r in cand],
@@ -1437,10 +1579,11 @@ def search(
                     )
                     break
             if top is None:
-                top = spark.createDataFrame(
-                    [(int(r["doc_id"]), float(r["score"])) for r in survivors],
-                    _RESULT_SCHEMA,
-                ).orderBy(F.desc("score"), F.asc("doc_id"))
+                # survivors keep the candidates' global rank order
+                top = _local_frame(spark, _RESULT_SCHEMA, {
+                    "doc_id": [int(r["doc_id"]) for r in survivors],
+                    "score": [float(r["score"]) for r in survivors],
+                })
         if start:  # paging applies to k=None too (ordered exhaustive result)
             top = top.offset(start)
     if not with_stored:
@@ -1696,7 +1839,7 @@ def search_dismax(
             if start:
                 top = top.offset(start)
         else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+            top = _local_frame(spark, _RESULT_SCHEMA)
     else:
         idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
         kernel = _dismax_kernel(
@@ -1707,17 +1850,12 @@ def search_dismax(
             ),
             excluded_terms=eterms,
         )
-        matched = _score_rows(index, spark).filter(
-            F.col("term").isin(
-                _scan_terms(index, list(dfs) + list(fterms) + list(eterms))
-            )
+        scan = _scan_terms(index, list(dfs) + list(fterms) + list(eterms))
+        matched = _score_rows(index, spark).filter(F.col("term").isin(scan))
+        top = _shard_topk(
+            spark, index, matched, lambda _: kernel, _RESULT_SCHEMA, scan,
+            fetch_k,
         )
-        local_topk = matched.groupBy("shard").applyInPandas(
-            kernel, _RESULT_SCHEMA
-        )
-        top = local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k is not None:
-            top = top.limit(fetch_k)
         if start:
             top = top.offset(start)
     if not with_stored:
@@ -1765,10 +1903,10 @@ def search_after(
     cursor therefore compares exactly."""
     if cursor == CURSOR_END:
         return (
-            spark.createDataFrame([], _RESULT_SCHEMA)
+            _local_frame(spark, _RESULT_SCHEMA)
             if not with_stored
             else _fetch_stored(
-                spark, index, spark.createDataFrame([], _RESULT_SCHEMA),
+                spark, index, _local_frame(spark, _RESULT_SCHEMA),
                 bounded=True,
             )
         )
@@ -1810,7 +1948,7 @@ def search_after(
                 out.orderBy("doc_id").limit(k).withColumn("score", F.lit(0.0))
             )
         else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+            top = _local_frame(spark, _RESULT_SCHEMA)
     else:
         spec = index.spec
         idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
@@ -1826,17 +1964,14 @@ def search_after(
             cursor=cursor, excluded_terms=eterms, const_groups=live_groups,
         )
         expansion_terms = [t for g, _ in live_groups for t in g]
-        matched = _score_rows(index, spark).filter(
-            F.col("term").isin(
-                _scan_terms(
-                    index,
-                    list(dfs) + list(fterms) + list(eterms)
-                    + expansion_terms,
-                )
-            )
+        scan = _scan_terms(
+            index,
+            list(dfs) + list(fterms) + list(eterms) + expansion_terms,
         )
-        local = matched.groupBy("shard").applyInPandas(kernel, _RESULT_SCHEMA)
-        top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        matched = _score_rows(index, spark).filter(F.col("term").isin(scan))
+        top = _shard_topk(
+            spark, index, matched, lambda _: kernel, _RESULT_SCHEMA, scan, k,
+        )
     if not with_stored:
         return top
     return _fetch_stored(spark, index, top, bounded=True)
@@ -2149,6 +2284,10 @@ def search_phrase(
     ``Σidf(term) · tf_norm(phrase_freq, dl)`` under the index's global BM25
     statistics.  ``filters`` compose exactly like :func:`search` (fq
     semantics).  Requires ``spec.positions=True`` (ValueError otherwise).
+
+    Like :func:`search`, a bounded phrase read under the driver-local size
+    gate (:func:`_shard_topk`) is computed at call time, and the returned
+    frame holds its ranked rows; other reads return a lazy plan.
     """
     if not index.spec.positions:
         raise ValueError(
@@ -2157,13 +2296,13 @@ def search_phrase(
     terms = _phrase_terms(phrase)
     fterms = filter_terms_of(filters)
     fetch_k = None if k is None else k + start
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
     if not terms:
-        top = empty
+        top = _local_frame(spark, _RESULT_SCHEMA)
     else:
         dfs = term_dfs(spark, index, list(dict.fromkeys(terms)))
         if len(dfs) < len(set(terms)):
-            top = empty  # a phrase term with df=0 empties the conjunction
+            # a phrase term with df=0 empties the conjunction
+            top = _local_frame(spark, _RESULT_SCHEMA)
         else:
             spec = index.spec
             idf_sum = sum(
@@ -2175,20 +2314,19 @@ def search_phrase(
             )
             # the phrase kernel never uses the block pruning stats or sum_tf
             # — keep them in the parquet footer
+            scan = _scan_terms(index, list(dfs) + list(fterms))
             matched = index.postings(spark).filter(
-                F.col("term").isin(_scan_terms(index, list(dfs) + list(fterms)))
+                F.col("term").isin(scan)
             ).select(
                 "shard", "term", "salt", "n_docs", "n_blocks",
                 "doc_ids", "boffs_ids", "block_last_id",
                 "tfs", "boffs_tfs", "dls", "boffs_dls",
                 "pos", "boffs_pos",
             )
-            local = matched.groupBy("shard").applyInPandas(
-                kernel, _RESULT_SCHEMA
+            top = _shard_topk(
+                spark, index, matched, lambda _: kernel, _RESULT_SCHEMA,
+                scan, fetch_k,
             )
-            top = local.orderBy(F.desc("score"), F.asc("doc_id"))
-            if k is not None:
-                top = top.limit(fetch_k)
     if start:
         top = top.offset(start)
     if not with_stored:
@@ -4087,7 +4225,7 @@ def more_like_this(
     )
     terms = [t for _, t in ranked[:max_terms]]
     if not terms:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return _local_frame(spark, _RESULT_SCHEMA)
     fetch = k + 1 if exclude_doc_id is not None else k
     if qf:
         # mlt.qf (the /browse config boosts MLT across its whole qf list,
@@ -4429,11 +4567,14 @@ def search_many(
     queries: dict[str, str | dict],
     k: int = 10,
 ) -> DataFrame:
-    """Answer MANY queries in ONE distributed pass (the batch-query path:
-    one postings scan filtered to the union of all query terms, one kernel
-    run per shard scoring every query with per-query MaxScore pruning and a
-    shared decode cache — see :func:`batch_kernel` — then one global
-    per-query top-k window).
+    """Answer MANY queries in ONE pass (the batch-query path: one postings
+    scan filtered to the union of all query terms, one kernel run per shard
+    scoring every query with per-query MaxScore pruning and a shared decode
+    cache — see :func:`batch_kernel` — then one per-query top-k).  A batch
+    whose scan is bounded under the driver-local size gate
+    (:func:`_shard_topk`) runs its kernels in the driver and is computed at
+    call time; larger batches plan the distributed kernel stage and a
+    per-query top-k window.
 
     Each queries value is a query STRING or a request dict with the full
     single-query surface — ``{"q": ..., "filters": {...}, "op": "AND",
@@ -4449,8 +4590,6 @@ def search_many(
     Returns (query_id, doc_id, score) with per-query rank order
     (score desc, doc_id asc), at most k rows per query.
     """
-    from pyspark.sql import Window
-
     plans: dict[str, tuple] = {}
     for qid, req in queries.items():
         if isinstance(req, str):
@@ -4533,31 +4672,23 @@ def search_many(
     have_groups = any(
         p[0] != "PHRASE" and any(g for g, _ in p[5]) for p in plans.values()
     )
-    empty = spark.createDataFrame([], "query_id string, doc_id long, score double")
-    if not all_terms and not all_fterms and not have_groups:
-        return empty
     dfs = term_dfs(spark, index, all_terms) if all_terms else {}
     if not dfs and not all_fterms and not have_groups:
-        return empty
+        return _local_frame(spark, _BATCH_SCHEMA)
     spec = index.spec
     idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
-    kernel = batch_kernel(
-        plans, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size
-    )
     scan_cols = _SCORE_COLS + (["pos", "boffs_pos"] if have_phrase else [])
+    scan = _scan_terms(index, list(idf) + all_fterms + all_eterms)
     matched = index.postings(spark).select(*scan_cols).filter(
-        F.col("term").isin(
-            _scan_terms(index, list(idf) + all_fterms + all_eterms)
-        )
+        F.col("term").isin(scan)
     )
-    local = matched.groupBy("shard").applyInPandas(
-        kernel, "query_id string, doc_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    return _shard_topk(
+        spark, index, matched,
+        lambda c: batch_kernel(
+            plans, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size,
+            counters=c,
+        ),
+        _BATCH_SCHEMA, scan, k, per="query_id",
     )
 
 

@@ -252,17 +252,20 @@ def test_cursor_sorted_rtget_elevation(spark, setup):
     assert len(elev) == 5
 
 
-def test_delete_by_query_and_scan_gating(spark, setup, tmp_path):
+def test_delete_by_query_and_scan_gating(spark, setup, tmp_path,
+                                        shard_paths):
     orig, mut, victims = setup
-    # plan gating: the tombstone term joins the scan ONLY with deletes
-    clean_plan = search(
-        spark, orig, Q, k=5, with_stored=False
-    )._jdf.queryExecution().executedPlan().toString()
-    del_plan = search(
-        spark, mut, Q, k=5, with_stored=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert DELETED_TERM not in clean_plan
-    assert DELETED_TERM in del_plan
+    # plan gating: the tombstone term joins the postings scan ONLY with
+    # deletes — on the scan the shard executor runs, on both of its paths
+    clean = shard_paths(lambda: search(spark, orig, Q, k=5, with_stored=False))
+    dele = shard_paths(lambda: search(spark, mut, Q, k=5, with_stored=False))
+    for path in ("driver", "distributed"):
+        clean_plans, del_plans = clean[path][1], dele[path][1]
+        assert clean_plans and del_plans
+        for plan in clean_plans:
+            assert "FileScan" in plan and DELETED_TERM not in plan
+        for plan in del_plans:
+            assert "FileScan" in plan and DELETED_TERM in plan
     # deleteByQuery tombstones the full match set
     dbq_dir = str(tmp_path / "dbq")
     snapshot_index(orig.path, dbq_dir)

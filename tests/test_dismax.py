@@ -238,21 +238,21 @@ def test_dismax_zero_hit_and_stored(spark, dm_index):
 # -------------------------------------------------------------------- plan
 
 
-def test_dismax_plan_is_term_pruned_and_posless(spark, dm_index):
+def test_dismax_plan_is_term_pruned_and_posless(spark, dm_index,
+                                                shard_paths):
     """The multi-field scan stays an explicit IN-list over (field, token)
-    candidates pushed to parquet, and never reads the positional payload."""
-    explained = (
-        search_dismax(
-            spark, dm_index, "index merge", QF, k=10, with_stored=False
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [In(term" in explained
-    read = explained.split("ReadSchema")[-1].split("\n")[0]
-    assert "pos" not in read, read
-    assert "path:index" in explained  # namespaced candidates in the IN-list
+    candidates pushed to parquet, and never reads the positional payload —
+    on the postings scan the shard executor runs, on both of its paths."""
+    got = shard_paths(lambda: search_dismax(
+        spark, dm_index, "index merge", QF, k=10, with_stored=False
+    ))
+    plans = got["driver"][1] + got["distributed"][1]
+    assert len(plans) == 3
+    for explained in plans:
+        assert "PushedFilters: [In(term" in explained
+        read = explained.split("ReadSchema")[-1].split("\n")[0]
+        assert "pos" not in read, read
+        assert "path:index" in explained  # namespaced IN-list candidates
 
 
 # ------------------------------------------------------------------ append

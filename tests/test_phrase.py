@@ -228,23 +228,28 @@ def test_phrase_survives_append_and_compact(spark, corpus, tmp_path):
     assert got3 == _want(_oracle(rows, "turbo writer"))
 
 
-def test_ranked_search_identical_and_pos_pruned(spark, corpus, tmp_path):
+def test_ranked_search_identical_and_pos_pruned(spark, corpus, tmp_path,
+                                                shard_paths):
     """A positional index answers ranked queries IDENTICALLY to a
-    positionless one, and the ranked plan never reads the pos payload."""
+    positionless one, and the ranked scan never reads the pos payload —
+    checked on the postings scan the shard executor runs, on its driver
+    path and on the distributed plan."""
     rows, ix = corpus
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     out = str(tmp_path / "ix_nopos")
     ix_nopos = build_index(spark, df, _spec(positions=False), out)
     q = "merge sort stream"
-    a = _got(search(spark, ix, q, k=10, with_stored=False))
+    got = shard_paths(lambda: search(spark, ix, q, k=10, with_stored=False))
     b = _got(search(spark, ix_nopos, q, k=10, with_stored=False))
-    assert a == b and len(a) == 10
-    plan = (
-        search(spark, ix, q, k=10, with_stored=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scans and all("pos" not in ln.split("ReadSchema")[1] for ln in scans)
+    for path in ("driver", "distributed"):
+        frame, plans = got[path]
+        assert _got(frame) == b and len(b) == 10
+        assert plans
+        for plan in plans:
+            scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+            assert scans and all(
+                "pos" not in ln.split("ReadSchema")[1] for ln in scans
+            )
 
 
 def test_phrase_composes_with_facets_and_sort(spark, corpus):

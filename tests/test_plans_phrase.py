@@ -53,17 +53,20 @@ def _scan_columns(plan: str) -> list[set]:
     return out
 
 
-def test_phrase_scan_prunes_block_stats(spark, index):
+def test_phrase_scan_prunes_block_stats(spark, index, shard_paths):
     """The ranked phrase scan reads positions but never the block pruning
-    stats or sum_tf (they are MaxScore machinery, not phrase machinery)."""
-    plan = _plan(search_phrase(spark, index, "read json", k=5,
-                               with_stored=False))
-    scans = _scan_columns(plan)
-    assert scans
-    assert any("pos" in s for s in scans)
-    for s in scans:
-        assert "block_max_tf" not in s and "sum_tf" not in s
-    assert "CartesianProduct" not in plan
+    stats or sum_tf (they are MaxScore machinery, not phrase machinery) —
+    asserted on the postings scan the shard executor runs, on the driver
+    path and on the distributed plan (whose result plan holds the scan)."""
+    got = shard_paths(lambda: search_phrase(spark, index, "read json", k=5,
+                                            with_stored=False))
+    for plan in got["driver"][1] + got["distributed"][1]:
+        scans = _scan_columns(plan)
+        assert scans
+        assert any("pos" in s for s in scans)
+        for s in scans:
+            assert "block_max_tf" not in s and "sum_tf" not in s
+        assert "CartesianProduct" not in plan
 
 
 def test_phrase_match_only_scan_prunes_dls(spark, index):
@@ -76,30 +79,44 @@ def test_phrase_match_only_scan_prunes_dls(spark, index):
         assert "dls" not in s and "block_max_tf" not in s
 
 
-def test_ranked_search_never_reads_positions(spark, index):
+def test_ranked_search_never_reads_positions(spark, index, shard_paths):
     """Ranked/mm queries on a positional index keep the pos payload in the
-    parquet footer."""
-    for df in (
-        search(spark, index, "parse buffer", k=5, with_stored=False),
-        search(spark, index, "parse buffer retry", k=5, with_stored=False,
-               min_match=2),
+    parquet footer, on both shard-executor paths."""
+    for read in (
+        lambda: search(spark, index, "parse buffer", k=5, with_stored=False),
+        lambda: search(spark, index, "parse buffer retry", k=5,
+                       with_stored=False, min_match=2),
     ):
-        for s in _scan_columns(_plan(df)):
-            assert "pos" not in s and "boffs_pos" not in s
+        got = shard_paths(read)
+        for plan in got["driver"][1] + got["distributed"][1]:
+            scans = _scan_columns(plan)
+            assert scans
+            for s in scans:
+                assert "pos" not in s and "boffs_pos" not in s
 
 
-def test_batch_scan_reads_positions_only_with_phrase(spark, index):
+def test_batch_scan_reads_positions_only_with_phrase(spark, index,
+                                                     shard_paths):
     """The batch scan includes the positional payload ONLY when the batch
-    contains a quoted entry."""
-    no_phrase = search_many(
+    contains a quoted entry — on both shard-executor paths."""
+    no_phrase = shard_paths(lambda: search_many(
         spark, index, {"a": "parse buffer", "b": "retry"}, k=5
-    )
-    for s in _scan_columns(_plan(no_phrase)):
-        assert "pos" not in s
-    with_phrase = search_many(
+    ))
+    with_phrase = shard_paths(lambda: search_many(
         spark, index, {"a": "parse buffer", "p": '"read json"'}, k=5
-    )
-    assert any("pos" in s for s in _scan_columns(_plan(with_phrase)))
+    ))
+    for path in ("driver", "distributed"):
+        plans = no_phrase[path][1]
+        assert plans
+        for plan in plans:
+            scans = _scan_columns(plan)
+            assert scans
+            for s in scans:
+                assert "pos" not in s
+        plans = with_phrase[path][1]
+        assert plans
+        for plan in plans:
+            assert any("pos" in s for s in _scan_columns(plan))
 
 
 def test_grouped_plan_shape(spark, index):
